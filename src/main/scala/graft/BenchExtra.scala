@@ -222,7 +222,7 @@ object BenchExtra {
       }
       val learner = new Learner(records, labels, cfg.blockingAttrs,
         cfg.k, cfg.seedRrCut, cfg.maxBlockSize,
-        maxCompare = cfg.maxCompare, dpParallelism = cfg.dpParallelism)
+        maxCompare = cfg.maxCompare)
       val conjunctions = time("e2e learner.learn()") {
         val l = learner.learn()
         learner.unpersist(); l

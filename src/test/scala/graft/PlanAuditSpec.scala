@@ -116,8 +116,11 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
     val labels = Seq(("a", "b", 1)).toDF("id_l", "id_r", "label")
     val learner = new graft.block.Learner(recs, labels,
       graft.normalize.Normalize.blockingAttributes)
-    val full = learner.statsPlan(
-      Seq("first_nchars_4_head_text"), Seq("acronym_tool_set"))
+    // one lockstep batch: extensions of two different bases
+    val full = learner.statsPlan(Seq(
+      Seq("first_nchars_4_head_text", "acronym_tool_set"),
+      Seq("first_nchars_4_head_text", "exactmatch_role_seq"),
+      Seq("acronym_tool_set", "exactmatch_role_seq")))
       .queryExecution.executedPlan.toString
     learner.unpersist()
     // audit only the batch plan ABOVE the cached signature table — the

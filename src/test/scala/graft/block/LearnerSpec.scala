@@ -88,18 +88,77 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
       .forall(_.conjunction.head != refused))
   }
 
-  test("parallel seed DP chains produce the bit-identical learned list " +
-    "(dpParallelism is an execution knob, not a semantic one)") {
-    val sequential = new Learner(train, labels, Seq("head_text", "role_seq"),
-      k = 3, seedRrCut = 0.0, maxBlockSize = 100, dpParallelism = 1).learn()
-    val parallel = new Learner(train, labels, Seq("head_text", "role_seq"),
-      k = 3, seedRrCut = 0.0, maxBlockSize = 100, dpParallelism = 4).learn()
-    // exact element-wise equality INCLUDING order — stats are a pure
-    // function of the data, chains are awaited in seed order, and
-    // distinctBy/sortBy are order-preserving/stable, so ties must land
-    // identically at any parallelism
-    assert(parallel == sequential)
-    assert(parallel.nonEmpty)
+  /** The sequential per-seed DP the depth-synchronous learner replaced,
+    * kept as its oracle: each seed's chain runs alone, one scoring call
+    * per base (`getBestFrom` verbatim, scoring through the learner's
+    * public `scoreBatch`), then flatten / `distinctBy` / `sortBy`.
+    * `extendSeeds` is the seed list `learn()` extends, in its order —
+    * the budget-refinable seeds in rank order, or every passing seed in
+    * scheme order after a coverage-gap escalation. Also returns the raw
+    * chains so a fixture can show its chains converge. */
+  private def referenceLearn(l: Learner, k: Int, seedRrCut: Double,
+                             extendSeeds: Map[String, ConjStats] => Seq[String])
+      : (Seq[ConjStats], Seq[Seq[ConjStats]]) = {
+    import scala.collection.mutable
+    def nGramCount(conj: Seq[String]): Int =
+      conj.count(_.startsWith("find_ngrams"))
+    def keepIf(s: ConjStats): Boolean =
+      s.positives > 0 && s.rr < 1.0 && s.nPairs > 1 &&
+        nGramCount(s.conjunction) <= 1
+    def getBestFrom(seed: String, singles: Map[String, ConjStats]): Seq[ConjStats] = {
+      val dp = mutable.ArrayBuffer.empty[ConjStats]
+      val s0 = singles(seed)
+      if (s0.positives == 0 || s0.rr < seedRrCut) return Nil
+      dp += s0
+      var n = 1
+      var done = false
+      while (n < k && !done) {
+        val base = dp(n - 1).conjunction
+        val extNames = l.schemes.map(_.name)
+          .filterNot(base.contains)
+          .filter(x => nGramCount(base :+ x) <= 1) // prune pre-score; same kept set
+        val candidates = l.scoreBatch(base, extNames).values.filter(keepIf)
+        if (candidates.isEmpty) done = true
+        else {
+          dp += candidates.maxBy(_.key)
+          n += 1
+        }
+      }
+      dp.toSeq
+    }
+    val singles = l.scoreBatch(Nil, l.schemes.map(_.name))
+    val passing = l.schemes.map(_.name).filter { s =>
+      val st = singles(s); st.positives > 0 && st.rr >= seedRrCut
+    }
+    val seeds = extendSeeds(singles)
+    val rest = passing.filterNot(seeds.contains)
+    val chains = seeds.map(s => getBestFrom(s, singles))
+    ((chains.flatten ++ rest.map(singles))
+      .distinctBy(_.conjunction.sorted)
+      .sortBy(_.key)(Ordering[(Double, Long, Long)].reverse), chains)
+  }
+
+  test("lockstep DP equals the sequential per-seed DP on converging " +
+    "chains") {
+    def mk() = new Learner(train, labels, Seq("head_text", "role_seq"),
+      k = 3, seedRrCut = 0.0, maxBlockSize = 100)
+    // the default budget refuses nothing: every passing seed is refined
+    val ref = mk()
+    val (expected, chains) = referenceLearn(ref, k = 3, seedRrCut = 0.0,
+      ref.refinableSeeds)
+    assert(ref.budgetMinRr < 0.0)
+    // premise: two chains reach the same SORTED conjunction along
+    // different paths — the case one lockstep batch scores once and
+    // each chain must still see in its own path order
+    val cells = chains.zipWithIndex.flatMap { case (c, i) =>
+      c.drop(1).map(s => (s.conjunction, i)) }
+    assert(cells.groupBy(_._1.sorted).values.exists { g =>
+      g.map(_._2).distinct.size > 1 && g.map(_._1).distinct.size > 1 },
+      "fixture no longer has chains converging along different paths")
+    val learned = mk().learn()
+    // exact element-wise equality INCLUDING order and path order
+    assert(learned == expected)
+    assert(learned.exists(_.conjunction.size == 3))
   }
 
   test("coverage-gap escalation: refinements of budget-refused seeds " +
@@ -138,8 +197,34 @@ class LearnerSpec extends AnyFunSuite with SparkSuite {
     // holds multi-scheme refinements and covers BOTH labeled positives
     assert(admitted.nonEmpty && admitted.forall(_.conjunction.size > 1))
     assert(l.coveredPositives(admitted.map(_.conjunction)) == 2L)
-    // no stale in-flight claims leak out of a learn() call
-    assert(l.inflight.isEmpty)
+    // and the escalated list is the sequential per-seed DP's
+    val reference = new Learner(recs, labs, Seq("head_text", "role_seq"),
+      k = 3, seedRrCut = 0.0, maxBlockSize = 100, maxCompare = 2L)
+    assert(learned == referenceLearn(reference, k = 3, seedRrCut = 0.0,
+      singles => reference.schemes.map(_.name).filter { s =>
+        singles(s).positives > 0 && singles(s).rr >= 0.0 })._1)
+  }
+
+  test("a failed stats batch leaves no persisted block table behind") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val sc = spark.sparkContext
+    // the label column throws once evaluated: the first batch's
+    // coverage collect fails while its block table is persisted
+    val boom = udf((v: Int) => {
+      if (v >= 0) throw new IllegalStateException("label unreadable"); v
+    })
+    // (an RDD source: over a local relation the optimizer would fold
+    // the UDF at plan time, before any batch runs)
+    val badLabels = sc.parallelize(Seq(("r1", "r2", 1), ("r5", "r6", 0)))
+      .toDF("id_l", "id_r", "label")
+      .withColumn("label", boom(col("label")))
+    val before = sc.getPersistentRDDs.keys.toSet
+    val l = new Learner(train, badLabels, Seq("head_text"), k = 2,
+      seedRrCut = 0.0, maxBlockSize = 100)
+    intercept[Exception](l.learn())
+    l.unpersist()
+    assert((sc.getPersistentRDDs.keys.toSet -- before).isEmpty,
+      "a persisted RDD outlived the failed learn()")
   }
 
   test("ngram constraint: conjunctions never contain 2 ngram schemes") {
